@@ -27,18 +27,16 @@ from sagan_spark.session import build_session
 
 CFG: dict = {}  # the run's config, from argv[1]
 PIPELINE_BUILDS = 3
-# marker file: the parent stops sampling peak RSS when it appears
-FIRST_JOB_DONE = "first_job.done"
 
 
-def rules_text(seed: int) -> tuple[str, dict | None]:
+def rules_text(slice_idx: int) -> tuple[str, dict | None]:
     if CFG["rules"] == "fixture":
         from sagan_spark.rules.fixture_rules import RULESET, VARIABLES
 
         return RULESET, VARIABLES
     from inputs import sparse_ruleset_text
 
-    return sparse_ruleset_text(seed, CFG["n_rules"]), None
+    return sparse_ruleset_text(slice_idx, CFG["n_rules"]), None
 
 
 def setup():
@@ -46,7 +44,7 @@ def setup():
     setup_s = process start → session ready, plus the median build."""
     spark = build_session("perfbench", master=f"local[{CFG['cores']}]")
     session_s = time.time() - CFG["spawn_t"]
-    text, variables = rules_text(CFG["seed"])
+    text, variables = rules_text(CFG["slice"])
     builds = []
     for _ in range(PIPELINE_BUILDS):
         t = time.time()
@@ -103,7 +101,6 @@ def one_job(spark, pipe, pages, i: int) -> dict:
 def untraced() -> dict:
     spark, pipe, pages, out = setup()
     jobs = [one_job(spark, pipe, pages, 0)]
-    open(os.path.join(CFG["tmp"], FIRST_JOB_DONE), "w").close()
     t0 = time.time()
     while len(jobs) < 2 or time.time() - t0 < CFG["seconds"]:
         jobs.append(one_job(spark, pipe, pages, len(jobs)))
@@ -185,20 +182,20 @@ def traced() -> dict:
         t = time.time()
         if layer == "compiler":
             rows["matched_pages"] = df.where(F.size("sids") > 0).count()
-        elif layer == "pipeline":
-            got = collect_counts(df)
-            rows["pipeline"] = sum(got.values())
-            rows["pipeline_groups"] = len(got)
         elif layer in COUNTED:
             rows[layer] = df.count()
         span(f"rows.{layer}", t, time.time(), parent=layer)
         cleanup_staged()
 
+    # the full job runs right after the last prefix (the same pipeline
+    # forced through the noop sink), so both see the same warm process
     sc.setJobDescription("perfbench:job")
     t = time.time()
     job_counts = sink_counts(pipe, pages)
     job = span("job", t, time.time())
     cleanup_staged()
+    rows["pipeline"] = sum(job_counts.values())
+    rows["pipeline_groups"] = len(job_counts)
 
     runner = None
     if CFG["trace_runner"]:
@@ -232,8 +229,10 @@ def traced() -> dict:
     layers.update(runner_metrics(runner, by_span, execs))
     layers["trace.first_job_s"] = first["end"] - first["start"]
     layers["trace.job_s"] = job["end"] - job["start"]
-    # the layer prefixes telescope to the last one; coverage compares
-    # them with a separately traced full job
+    # the self times telescope to the wall of the last prefix, the whole
+    # pipeline forced through the noop sink; coverage is that wall over
+    # the traced full job's, i.e. how much of the job the prefixes
+    # attribute to layers (> 1: forcing a prefix costs more than the job)
     layers["trace.coverage"] = sum(layers[f"{x}.self_s"] for x in LAYERS) / layers["trace.job_s"]
     out.update(
         layers=layers,
@@ -333,13 +332,13 @@ def runner_metrics(runner, by_span, execs) -> dict:
 
 
 def pin() -> dict:
-    """Reference counts for each seed in CFG["pin"] (one job per seed)."""
+    """Reference counts for each slice in CFG["pin"] (one job per slice)."""
     spark = build_session("perfbench", master=f"local[{CFG['cores']}]")
     out = {}
-    for seed, pages_dir in CFG["pin"]:
-        text, variables = rules_text(seed)
+    for slice_idx, pages_dir in CFG["pin"]:
+        text, variables = rules_text(slice_idx)
         pipe = Pipeline(spark, parse_rules(text, variables))
-        out[str(seed)] = sink_counts(pipe, spark.read.parquet(pages_dir))
+        out[str(slice_idx)] = sink_counts(pipe, spark.read.parquet(pages_dir))
         cleanup_staged()
     spark.stop()
     return out

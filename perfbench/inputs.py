@@ -1,13 +1,15 @@
 """Seeded benchmark inputs: the documents behind the `pages` table and
 the generated ruleset of the `rules_sparse` workload.
 
-The program only ever sees these generated files.  Documents mimic the
-shape of the test data's ``documents.parquet`` (prose drawn from a small
-word vocabulary, 10-100 words, a skewed `lang`, 20 `source` values), so
-every fixture rule can fire.  The seed picks the slice of doc ids, and
-``pages.load_pages`` derives domain and `warc_epoch` from the doc id and
-replica number, so another seed also gives other domains and another
-timeline.
+Documents come from ``data/documents.parquet``, a copy of the sf0.1
+``documents.parquet`` test table (5000 documents, doc ids 0..4999),
+kept here so a run reads nothing outside its checkout.  The seed picks
+one of ``SLICES`` slices: a run of consecutive doc ids (wrapping round
+the corpus) whose start moves by a prime stride from one slice to the
+next.  ``pages.pages_cte`` derives domain, ``warc_epoch`` and the
+appended triggers from the doc id and replica number, so another slice
+also gives other domains and another timeline.  Every seed maps to a
+slice, and every slice has pinned reference counts.
 """
 
 from __future__ import annotations
@@ -15,58 +17,28 @@ from __future__ import annotations
 import os
 import random
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-WORDS = (
-    "a agg batch big column customer data fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream "
-    "table the value vector window"
-).split()
-LANGS = ("en", "de", "es", "fr", "zh")
-LANG_WEIGHTS = (41, 14, 15, 15, 15)
-SOURCES = 20
-# doc ids of one seed's slice start at seed * DOC_ID_STRIDE
-DOC_ID_STRIDE = 100_003
+HERE = os.path.dirname(os.path.abspath(__file__))
+DOCUMENTS = os.path.join(HERE, "data", "documents.parquet")
+SLICES = 32
+SLICE_STRIDE = 1013  # doc ids between the starts of two neighbouring slices
 
 
-def write_documents(path: str, seed: int, n_docs: int) -> None:
-    rng = random.Random(seed)
-    base = seed * DOC_ID_STRIDE
-    ids, texts, langs, sources = [], [], [], []
-    for i in range(n_docs):
-        doc_id = base + i
-        words = rng.choices(WORDS, k=rng.randint(10, 100))
-        if rng.random() < 0.05:
-            words.insert(rng.randrange(len(words)), "dup")
-        ids.append(doc_id)
-        texts.append(" ".join(words))
-        langs.append(rng.choices(LANGS, LANG_WEIGHTS)[0])
-        sources.append(f"src{doc_id % SOURCES}")
-    table = pa.table(
-        {
-            "doc_id": pa.array(ids, pa.int64()),
-            "text": pa.array(texts, pa.string()),
-            "lang": pa.array(langs, pa.string()),
-            "source": pa.array(sources, pa.string()),
-            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-        }
-    )
-    pq.write_table(table, path)
+def slice_of(seed: int) -> int:
+    return seed % SLICES
 
 
-def sparse_ruleset_text(seed: int, n_rules: int) -> str:
+def sparse_ruleset_text(slice_idx: int, n_rules: int) -> str:
     """Ungated rules in the `rules.synth` vocabulary, shaped so that
     only a small share can fire on any one page.
 
     Three in four rules probe dead vocabulary (a content term that no
     page holds); every fourth is a `port` pcre rule that fires on one
-    band of 100 live port numbers.  The seed picks the terms and the
-    bands, never the mix, so every seed asks the same amount of work.
+    band of 100 live port numbers.  The slice picks the terms and the
+    bands, never the mix, so every slice asks the same amount of work.
     No rule carries after, threshold or xbits options, so the gate
     layer has nothing to do."""
-    rng = random.Random(seed * 7919 + 1)
-    base_sid = 6_000_000 + (seed % 1000) * 10_000
+    rng = random.Random(slice_idx * 7919 + 1)
+    base_sid = 6_000_000 + slice_idx * 10_000
     lines = []
     for i in range(n_rules):
         if i % 4 != 3:
@@ -82,16 +54,21 @@ def sparse_ruleset_text(seed: int, n_rules: int) -> str:
     return "\n".join(lines)
 
 
-def duck_connect(docs_path: str, spill_dir: str):
-    """DuckDB connection with a `documents` view over the generated
-    documents, spilling into the benchmark's own directory."""
+def duck_connect(slice_idx: int, n_docs: int, spill_dir: str):
+    """DuckDB connection with a `documents` view over one slice of
+    ``n_docs`` documents, spilling into the benchmark's own directory."""
     import duckdb
 
     con = duckdb.connect()
     con.execute("SET threads=2")
     con.execute("SET memory_limit='3GB'")
     con.execute(f"SET temp_directory='{spill_dir}'")
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs_path}'")
+    total = con.execute(f"SELECT count(*) FROM '{DOCUMENTS}'").fetchone()[0]
+    start = slice_idx * SLICE_STRIDE % total
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{DOCUMENTS}' "
+        f"WHERE (doc_id - {start} + {total}) % {total} < {n_docs}"
+    )
     return con
 
 

@@ -6,15 +6,17 @@ Run from the repository root:
     python3 perfbench/run.py --workload flagship --seed 1 --seconds 10 --trace 0
     python3 perfbench/run.py --all --seed 1     # every workload, both modes
 
-One run generates its inputs from the seed (untimed; they stand in for
-the Iceberg `pages` table), then starts one fresh process pinned to at
-most the CPUs of this process's affinity mask.  That process drives a
-closed loop, one job at a time: the first job, then warm jobs for
-``--seconds``.  The parent samples the RSS of the whole process tree
-(JVM and Python UDF workers) through /proc from process start through
-the first job, checks every job's
-per-sink, per-signature counts against the pinned reference, records
-hypervisor steal and load around the run, and prints the metrics; the
+One run builds its inputs from the seed (untimed; they stand in for
+the Iceberg `pages` table): the seed picks one of ``inputs.SLICES``
+slices of the sf0.1 documents, and of the generated ruleset.  It then
+starts one fresh process pinned to at most the CPUs of this process's
+affinity mask.  That process drives a closed loop, one job at a time:
+the first job, then warm jobs for ``--seconds``.  The parent samples
+the RSS of the whole process tree (JVM and Python UDF workers) through
+/proc over the whole run, checks every job's per-sink, per-signature
+counts against the reference pinned for the slice (a slice without one
+fails the run) and against the first job's, records hypervisor steal
+and load around the run, and prints the metrics; the
 last stdout line is one JSON object.  ``--trace 1`` instead runs the
 traced process (see cell.py) and prints the per-layer metrics.
 
@@ -55,7 +57,7 @@ PAGE_FILES = 16
 
 
 def input_key(w: dict) -> str:
-    size = f"{w['n_docs']}x{w['rep']}"
+    size = f"sf0.1-{w['n_docs']}x{w['rep']}"
     return f"fixture-{size}" if w["rules"] == "fixture" else f"sparse{w['n_rules']}-{size}"
 
 
@@ -85,8 +87,10 @@ def loadavg() -> float:
         return float(f.read().split()[0])
 
 
-def session_pids(sid: int) -> list[int]:
-    pids = []
+def session_procs(sid: int) -> dict[int, tuple[int, int, int]]:
+    """pid → (ppid, vsize, rss pages) of every live process in session
+    `sid`."""
+    procs = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
             continue
@@ -95,22 +99,25 @@ def session_pids(sid: int) -> list[int]:
                 fields = f.read().rsplit(")", 1)[1].split()
         except OSError:
             continue
-        # fields 3 and 6 of stat: state, session id (zombies hold no memory)
+        # stat fields 3, 4, 6, 23, 24: state, ppid, session id, vsize,
+        # rss (zombies hold no memory)
         if int(fields[3]) == sid and fields[0] != "Z":
-            pids.append(int(name))
-    return pids
+            procs[int(name)] = (int(fields[1]), int(fields[20]), int(fields[21]))
+    return procs
 
 
 def tree_rss_mb(sid: int) -> float:
-    page = os.sysconf("SC_PAGE_SIZE")
-    total = 0
-    for pid in session_pids(sid):
-        try:
-            with open(f"/proc/{pid}/statm") as f:
-                total += int(f.read().split()[1]) * page
-        except OSError:
-            continue
-    return total / (1 << 20)
+    """RSS of the process tree.  A child the JVM has just spawned shares
+    the JVM's address space until it execs (posix_spawn uses vfork), so
+    it reads the JVM's whole RSS; a child whose vsize and RSS equal its
+    parent's is that address space again and is not counted twice."""
+    procs = session_procs(sid)
+    pages = sum(
+        rss
+        for ppid, vsize, rss in procs.values()
+        if procs.get(ppid, (None,))[1:] != (vsize, rss)
+    )
+    return pages * os.sysconf("SC_PAGE_SIZE") / (1 << 20)
 
 
 def kill_session(sid: int) -> None:
@@ -118,7 +125,7 @@ def kill_session(sid: int) -> None:
     until none remains."""
     deadline = time.time() + 30
     while time.time() < deadline:
-        pids = session_pids(sid)
+        pids = session_procs(sid)
         if not pids:
             return
         for pid in pids:
@@ -133,13 +140,12 @@ def kill_session(sid: int) -> None:
 # one run
 
 
-def make_inputs(w: dict, seed: int, tmp: str, pages_dir: str) -> int:
-    """Seeded documents → the `pages` parquet table; returns its size."""
+def make_inputs(w: dict, slice_idx: int, tmp: str, pages_dir: str) -> int:
+    """One slice of the documents → the `pages` parquet table; returns
+    its size."""
     import inputs
 
-    docs = os.path.join(tmp, "documents.parquet")
-    inputs.write_documents(docs, seed, w["n_docs"])
-    con = inputs.duck_connect(docs, os.path.join(tmp, "duckdb-spill"))
+    con = inputs.duck_connect(slice_idx, w["n_docs"], os.path.join(tmp, "duckdb-spill"))
     try:
         return inputs.write_pages(con, pages_dir, w["rep"], PAGE_FILES)
     finally:
@@ -177,17 +183,10 @@ def spawn_cell(cfg: dict, cpus: list[int], timeout: float) -> tuple[dict | None,
         )
         peak = [0.0]
         done = threading.Event()
-        first_job_done = os.path.join(tmp, "first_job.done")
 
         def sample():
-            # peak from process start through the first job: later, the
-            # pinned JVM heap gets touched (or not) as old gen fills,
-            # which makes a whole-run peak jump between runs by ~2.5 GB
             while not done.is_set():
-                stop = os.path.exists(first_job_done)
                 peak[0] = max(peak[0], tree_rss_mb(proc.pid))
-                if stop:
-                    break
                 done.wait(0.1)
 
         sampler = threading.Thread(target=sample, daemon=True)
@@ -218,17 +217,21 @@ def diff(got: dict, ref: dict) -> list[str]:
 def run_one(name: str, seed: int, seconds: float, trace: bool) -> dict:
     """One workload run.  Returns {"ok", "result" (the JSON line),
     "lines" (the human report), ...}."""
+    import inputs
+
     w = WORKLOADS[name]
+    slice_idx = inputs.slice_of(seed)
     tmp = os.path.join(SCRATCH, f"run-{os.getpid()}-{name}-{int(trace)}")
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     try:
-        n_pages = make_inputs(w, seed, tmp, os.path.join(tmp, "pages"))
+        n_pages = make_inputs(w, slice_idx, tmp, os.path.join(tmp, "pages"))
         cpus = cell_cpus(w["cores"])
         cfg = dict(
             w,
             workload=name,
             seed=seed,
+            slice=slice_idx,
             seconds=seconds,
             trace=trace,
             tmp=tmp,
@@ -251,7 +254,7 @@ def run_one(name: str, seed: int, seconds: float, trace: bool) -> dict:
     d = [b - a for a, b in zip(cpu0, cpu1)]
     steal = d[7] / max(sum(d), 1) if len(d) > 7 else 0.0
     lines = [
-        f"{name} seed={seed} trace={int(trace)} pages={n_pages} cpus={cpus}",
+        f"{name} seed={seed} slice={slice_idx} trace={int(trace)} pages={n_pages} cpus={cpus}",
         f"  noise: steal {steal:.2%}, load1 {load0:.2f} -> {load1:.2f}",
     ]
     if res is None:
@@ -259,13 +262,9 @@ def run_one(name: str, seed: int, seconds: float, trace: bool) -> dict:
         lines += ["    " + x for x in err_tail.splitlines()]
         return {"ok": False, "lines": lines}
 
-    refs = load_references().get(input_key(w), {})
-    ref = refs.get(str(seed))
+    ref = load_references().get(input_key(w), {}).get(str(slice_idx))
     if ref is None:
-        lines.append(
-            f"  no pinned reference for seed {seed}: checking that every job agrees "
-            "with the first one only"
-        )
+        lines.append(f"  no pinned reference for {input_key(w)} slice {slice_idx}: every job fails")
     if trace:
         checked = list(res["counts"].items())
     else:
@@ -273,22 +272,29 @@ def run_one(name: str, seed: int, seconds: float, trace: bool) -> dict:
     errors = [] if trace else [
         (f"job {i}", j["error"]) for i, j in enumerate(res["jobs"]) if "error" in j
     ]
-    if ref is None:
-        ref = next((c for _, c in checked if c is not None), {})
+    first = next((c for _, c in checked if c is not None), None)
     failed = len(errors)
     for label, counts in checked:
         if counts is None:
             continue
-        bad = diff(counts, ref)
-        if bad:
+        # the pinned reference decides; agreement with the first job is
+        # an extra check that catches a job-to-job drift on its own
+        bad = ["no pinned reference"] if ref is None else diff(counts, ref)
+        drift = diff(counts, first)
+        if bad or drift:
             failed += 1
+        if bad and ref is not None:
             lines.append(f"  {label}: per-sink counts differ from the reference:")
             lines += ["    " + x for x in bad[:50]]
+        if drift:
+            lines.append(f"  {label}: per-sink counts differ from the first job's:")
+            lines += ["    " + x for x in drift[:50]]
     for label, e in errors:
         lines.append(f"  {label} raised: {e}")
     attempted = len(checked)
 
     if trace:
+        res["layers"]["trace.peak_rss_mb"] = peak_mb
         metrics = {
             m["name"]: {"value": res["layers"][m["name"]], "unit": m["unit"]}
             for m in benchmark()["per_layer"]
@@ -333,11 +339,13 @@ def benchmark() -> dict:
         return json.load(f)
 
 
-def pin(seeds: list[int]) -> None:
+def pin() -> None:
     """Record the per-sink counts of this commit as the reference for
-    `seeds`, for the inputs of every workload."""
+    every slice of the inputs of every workload."""
+    import inputs
+
     path = os.path.join(HERE, "reference.json")
-    refs = load_references()
+    refs: dict = {}
     families: dict[str, str] = {}  # input family → one workload that reads it
     for name, w in WORKLOADS.items():
         families.setdefault(input_key(w), name)
@@ -348,10 +356,10 @@ def pin(seeds: list[int]) -> None:
         os.makedirs(tmp)
         try:
             todo = []
-            for seed in seeds:
-                pages_dir = os.path.join(tmp, f"pages-{seed}")
-                make_inputs(w, seed, tmp, pages_dir)
-                todo.append((seed, pages_dir))
+            for slice_idx in range(inputs.SLICES):
+                pages_dir = os.path.join(tmp, f"pages-{slice_idx}")
+                make_inputs(w, slice_idx, tmp, pages_dir)
+                todo.append((slice_idx, pages_dir))
             cpus = cell_cpus(4)
             cfg = dict(w, tmp=tmp, cores=len(cpus), trace=False, pin=todo)
             res, _, err_tail = spawn_cell(cfg, cpus, timeout=3600)
@@ -359,11 +367,11 @@ def pin(seeds: list[int]) -> None:
             shutil.rmtree(tmp, ignore_errors=True)
         if res is None:
             sys.exit(f"perfbench: pinning {name} failed:\n{err_tail}")
-        refs.setdefault(input_key(w), {}).update(res)
+        refs[input_key(w)] = res
         with open(path, "w") as f:
             json.dump(refs, f, sort_keys=True)
             f.write("\n")
-        print(f"pinned {input_key(w)} for seeds {seeds[0]}..{seeds[-1]}", flush=True)
+        print(f"pinned {input_key(w)} for slices 0..{inputs.SLICES - 1}", flush=True)
 
 
 # --------------------------------------------------------------------------
@@ -388,7 +396,7 @@ def main() -> int:
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--pin", type=int, metavar="N", help="record reference counts for seeds 0..N-1")
+    ap.add_argument("--pin", action="store_true", help="record reference counts for every slice")
     args = ap.parse_args()
     if not (args.all or args.workload or args.pin):
         ap.error("give --workload, --all or --pin")
@@ -398,7 +406,7 @@ def main() -> int:
     # SystemExit unwinds through spawn_cell's cleanup)
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if args.pin:
-        pin(list(range(args.pin)))
+        pin()
         return 0
     if args.all:
         from report import run_all
