@@ -81,24 +81,20 @@ atexit.register(cleanup_staged)
 
 
 def stage_frame(df: DataFrame, name: str = "stage") -> DataFrame:
-    """Materialize a frame once and return a scan over it.
-
-    Default mode writes a staged parquet snapshot and re-reads it (the
-    cluster-scale shape: an Iceberg staging table).  ``persist`` mode
-    keeps the r1 in-memory cache.  Measured at 320k pages/local[32]:
-    the persist barrier fed 5 downstream branch reads through the block
-    -manager cache — branch stages racing to materialize the same
-    blocks serialized on cache locks, and the cached blocks promoted to
-    old gen, driving 30s+ ParallelGC full collections on later runs.
-    The staged write is an explicit barrier with none of that: one
-    parallel write, then plain splittable scans.
+    """Materialize a frame once and return a scan over it: a staged
+    parquet snapshot, re-read (the cluster-scale shape: an Iceberg
+    staging table).  The r1 in-memory ``persist()`` barrier measured
+    worse at 320k pages/local[32]: branch stages racing to materialize
+    the same cached blocks serialized on cache locks, and the cached
+    blocks promoted to old gen, driving 30s+ ParallelGC full
+    collections on later runs.  The staged write is an explicit
+    barrier with none of that: one parallel write, then plain
+    splittable scans.
     """
-    mode = os.environ.get("SPARK_GRAFT_GATE_STAGING", "parquet")
-    if mode == "persist":
-        return df.persist()
     path = os.path.join(_stage_base(), f"{name}-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
+
 
 TRACK_CASE = {
     "by_src": "src_ip",
@@ -153,7 +149,7 @@ def gates_cfg_df(spark: SparkSession, rules: list[Rule]) -> DataFrame:
 
 
 def split_window_gates(
-    df: DataFrame, cfg: DataFrame, rules: list[Rule], stage: bool = True
+    df: DataFrame, cfg: DataFrame, rules: list[Rule]
 ) -> tuple[DataFrame | None, DataFrame, set[int]]:
     """df = exploded+extracted hits.  Returns ``(win, rest, win_sids)``:
     ``win`` = rows of window-gated rules surviving their after/threshold
@@ -164,9 +160,9 @@ def split_window_gates(
     The split form exists so the bit-test stage (gates/xbits.py
     ``apply_gates``) can source each of its branches from the SAME
     staged snapshot this function writes — collapsing the pre-r4
-    pregate+bitbase double staging into one barrier.  When ``stage``
-    and gated rules exist, the keyed stream is staged ONCE here and
-    both returned frames are scans over that snapshot; when no rule is
+    pregate+bitbase double staging into one barrier.  When gated rules
+    exist, the keyed stream is staged ONCE here and both returned
+    frames are scans over that snapshot; when no rule is
     window-gated, ``rest`` is returned UNSTAGED (the caller owns the
     barrier decision).
 
@@ -199,8 +195,7 @@ def split_window_gates(
     gated_sids = [r.sid for r in rules if r.after or r.threshold]
     if not gated_sids:
         return None, df, set()
-    if stage:
-        df = stage_frame(df, "pregate")
+    df = stage_frame(df, "pregate")
     rest = df.where(~F.col("sid").isin(gated_sids))
     df = df.where(F.col("sid").isin(gated_sids))
     # NARROW window rows (r4 session 2, same shape as the bit sweeps):

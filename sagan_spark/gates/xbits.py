@@ -24,12 +24,15 @@ bounded look-back tail — see runner/ checkpoint notes).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sagan_spark.gates.windows import track_key_col, track_key_sql
+from sagan_spark.gates.windows import (
+    split_window_gates,
+    stage_frame,
+    track_key_col,
+    track_key_sql,
+)
 from sagan_spark.rules.model import Rule
 
 
@@ -99,16 +102,10 @@ def apply_gates(
     branch) and NO second staging write happens; when they overlap, the
     (small) window-gated subset is staged so each overlapping branch
     reads a scan instead of re-sorting."""
-    from sagan_spark.gates.windows import split_window_gates, stage_frame
-
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
     has_bits = bool(tests or counts)
-    # probe-memo identity is the PRE-staging plan: the staged snapshot's
-    # path changes per run but its contents derive deterministically
-    # from this plan, so the hottest-group count is a pure function of it
-    probe_key = _plan_key(df) if counts else None
-    win, rest, win_sids = split_window_gates(df, cfg, rules, stage=True)
+    win, rest, win_sids = split_window_gates(df, cfg, rules)
     if not has_bits:
         return rest if win is None else win.unionByName(rest)
     if win is None:
@@ -147,63 +144,34 @@ def apply_gates(
             out = out.unionByName(p)
         return out
 
-    return _bit_tests_core(source, rules, spark, probe_key=probe_key)
+    return _bit_tests_core(source, rules, spark)
 
 
-def apply_bit_tests(
-    df: DataFrame, rules: list[Rule], spark: SparkSession, persist: bool = True
-) -> DataFrame:
+def apply_bit_tests(df: DataFrame, rules: list[Rule], spark: SparkSession) -> DataFrame:
     """Standalone bit-test operator over an already-gated stream:
     filter tester-rule rows by their isset/isnotset/count conditions;
     non-tester rows pass through untouched.  (The flagship pipeline
     uses :func:`apply_gates`, which shares the window stage's staging
     barrier instead of writing its own.)
 
-    ``persist=True`` stages ``df`` once: it feeds several branches
-    (events, testers, pass-through), and without a barrier each branch
-    would recompute the entire upstream plan."""
+    ``df`` is staged once: it feeds several branches (events, testers,
+    pass-through), and without a barrier each branch would recompute
+    the entire upstream plan."""
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
     if not tests and not counts:
         return df
-    probe_key = _plan_key(df) if counts else None
-    if persist:
-        from sagan_spark.gates.windows import stage_frame
-
-        df = stage_frame(df, "bitbase")
+    df = stage_frame(df, "bitbase")
 
     def source(sids, exclude: bool = False) -> DataFrame:
         sids = list(sids)
         cond = F.col("sid").isin(sids)
         return df.where(~cond if exclude else cond)
 
-    return _bit_tests_core(source, rules, spark, probe_key=probe_key)
+    return _bit_tests_core(source, rules, spark)
 
 
-def _plan_key(df: DataFrame) -> int | None:
-    """Semantic hash of the analyzed plan — the stable identity used by
-    the flexcount probe memo.  None (→ no memoization) if the py4j
-    surface changed."""
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
-
-
-# hottest-(name, key)-group row count per (upstream plan, count specs)
-# — see the auto-trigger block in _apply_count_tests
-_FLEXCOUNT_PROBE_CACHE: dict[tuple, int] = {}
-
-
-def clear_flexcount_probe_cache() -> None:
-    """Invalidation hook for the rewrote-the-same-path case the
-    semantic-hash key cannot see (twin of clear_centroid_cache)."""
-    _FLEXCOUNT_PROBE_CACHE.clear()
-
-
-def _bit_tests_core(
-    source, rules: list[Rule], spark: SparkSession, probe_key: int | None = None
-) -> DataFrame:
+def _bit_tests_core(source, rules: list[Rule], spark: SparkSession) -> DataFrame:
     """Shared bit-test plan builder.  ``source(sids, exclude=False)``
     returns the gated alert rows for a sid set (all frames it returns
     must share one schema).
@@ -231,8 +199,7 @@ def _bit_tests_core(
     if counts:
         rest = rest.unionByName(
             _apply_count_tests(
-                source(count_sids), source(writer_sids), counts, writes_df, spark,
-                probe_key=probe_key,
+                source(count_sids), source(writer_sids), counts, writes_df, spark
             )
         )
     if not tests:
@@ -330,7 +297,6 @@ def _apply_count_tests(
     counts: list[tuple],
     writes_df: DataFrame,
     spark: SparkSession,
-    probe_key: int | None = None,
 ) -> DataFrame:
     """flexbits ``count`` testers ([U] src/flexbit.c counter form).
 
@@ -433,51 +399,14 @@ def _apply_count_tests(
             F.lit(None).cast("long").alias("tsid"),
         )
     )
-    stream = event_rows.unionByName(tester_rows)
-    mode = os.environ.get("SPARK_GRAFT_FLEXCOUNT_MODE", "auto")
-    if mode == "auto":
-        # hot-key trigger: one cheap stats job over the (payload-pruned)
-        # stream decides whether any single (name, key) group has
-        # outgrown one task's sort.  The columns scanned are tiny (the
-        # staged base is parquet, payload pruned away), and at 100× one
-        # Zipf-hot domain otherwise serializes the whole stage.
-        #
-        # The hottest-group count is MEMOIZED per (upstream-plan
-        # semantic hash, count specs): the probe is an eager one-row
-        # job at plan-build time, and a session that rebuilds the same
-        # pipeline over the same input (bench reps, repeated queries)
-        # re-paid its ~1 s of fixed latency for a deterministic answer.
-        # Same immutable-path contract as the IVF centroid memo
-        # (datapipe/similarity.py) — regenerating data IN PLACE at the
-        # same path must call clear_flexcount_probe_cache().
-        cache_key = None if probe_key is None else (probe_key, tuple(sorted(counts)))
-        max_group = _FLEXCOUNT_PROBE_CACHE.get(cache_key) if cache_key else None
-        if max_group is None:
-            stats = (
-                event_rows.select("cname", "ckey", "epoch")
-                .unionByName(tester_rows.select("cname", "ckey", "epoch"))
-                .groupBy("cname", "ckey")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.max("n").alias("max_group"),
-                )
-                .first()
-            )
-            max_group = stats["max_group"] or 0
-            if cache_key is not None:
-                _FLEXCOUNT_PROBE_CACHE[cache_key] = max_group
-        mode = _pick_flexcount_plan(max_group)
-    global LAST_FLEXCOUNT_PLAN
-    LAST_FLEXCOUNT_PLAN = mode
-    if mode == "chunked":
-        withn = _chunked_running_sum(stream)
-    else:
-        w = (
-            Window.partitionBy("cname", "ckey")
-            .orderBy("epoch", "k0", "surl", "k1")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        withn = stream.withColumn("_n", F.sum("delta").over(w))
+    w = (
+        Window.partitionBy("cname", "ckey")
+        .orderBy("epoch", "k0", "surl", "k1")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    withn = event_rows.unionByName(tester_rows).withColumn(
+        "_n", F.sum("delta").over(w)
+    )
     ok = (
         F.when(F.col("cmp") == "gt", F.col("_n") > F.col("cval"))
         .when(F.col("cmp") == "lt", F.col("_n") < F.col("cval"))
@@ -492,94 +421,6 @@ def _apply_count_tests(
         .select(F.col("surl").alias("url"), F.col("tsid").alias("sid"))
     )
     return tester_src.join(passed_keys, ["url", "sid"], "leftsemi")
-
-
-# last plan `_apply_count_tests` chose ("single" | "chunked") — observable
-# for the trigger tests and for bench forensics
-LAST_FLEXCOUNT_PLAN: str | None = None
-
-# A (name, key) group beyond this row count escalates to the epoch-
-# chunked two-phase prefix sum.  r5 calibration (scripts/
-# calibrate_flexcount.py: isolated single-hot-group sweep at 8 pinned
-# cores, interleaved modes, warmup-dropped):
-#
-#   rows/group   single-window   chunked
-#      2×10^5          1.0 s       2.1 s
-#      1×10^6          2.7 s       2.6 s   ← tie
-#      2×10^6          4.5 s       2.2 s
-#      4×10^6         10.2 s       3.7 s
-#      8×10^6         33.4 s       4.9 s
-#     16×10^6         53.1 s       9.2 s
-#
-# The single-task sort degrades super-linearly past ~10^6 rows (sort
-# spill) while chunked stays near-flat.  Threshold 2M rather than the
-# 1M tie point: the r3 FULL-pipeline A/B at 6×10^5 rows showed single
-# clearly faster in context (chunked's extra shuffle competes with
-# concurrent stages), so the default biases to single where the two
-# are close and escalates where chunked wins ≥2×.  (Pre-r5 value was 8M,
-# extrapolated from the 6×10^5 A/B alone.)
-FLEXCOUNT_CHUNK_THRESHOLD = 2_000_000
-FLEXCOUNT_TARGET_CHUNKS = 64
-
-
-def _pick_flexcount_plan(max_group: int) -> str:
-    """Escalation trigger: 'chunked' iff the hottest (name, key) group
-    exceeds the single-task sort threshold (env-overridable)."""
-    thr = int(
-        os.environ.get("SPARK_GRAFT_FLEXCOUNT_CHUNK_ROWS", FLEXCOUNT_CHUNK_THRESHOLD)
-    )
-    return "chunked" if max_group > thr else "single"
-
-
-def _chunked_running_sum(stream: DataFrame) -> DataFrame:
-    """Epoch-chunked two-phase prefix sum over the count stream — the
-    hot-key escalation ([U] no upstream analog; upstream's mmap counter
-    is inherently single-threaded per key).
-
-    A single (name, key) window group lands in ONE task; for a Zipf-hot
-    key at 100× that task serializes the stage.  Phase 1 splits each
-    group into epoch chunks (epoch is the leading sort key, so equal
-    epochs never straddle a chunk) and computes the running sum WITHIN
-    (name, key, chunk) — parallel across chunks of the same hot key.
-    Phase 2 turns per-chunk totals into per-chunk offsets with a window
-    over the (tiny) chunk-totals frame and broadcast-joins them back:
-    global running sum = local running sum + preceding-chunks offset.
-
-    Cost: one extra small shuffle (chunk totals) + a broadcast join —
-    the A/B'd overhead that makes this the escalation path, not the
-    default (see FLEXCOUNT_CHUNK_THRESHOLD)."""
-    bounds = stream.agg(
-        F.min("epoch").alias("emin"), F.max("epoch").alias("emax")
-    ).first()
-    emin, emax = bounds["emin"], bounds["emax"]
-    if emin is None:
-        return stream.withColumn("_n", F.col("delta").cast("long"))
-    width = max(1, (int(emax) - int(emin) + 1) // FLEXCOUNT_TARGET_CHUNKS)
-    chunked = stream.withColumn(
-        "_chunk", ((F.col("epoch") - F.lit(int(emin))) / F.lit(width)).cast("long")
-    )
-    w_local = (
-        Window.partitionBy("cname", "ckey", "_chunk")
-        .orderBy("epoch", "k0", "surl", "k1")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    chunked = chunked.withColumn("_ls", F.sum("delta").over(w_local))
-    totals = chunked.groupBy("cname", "ckey", "_chunk").agg(
-        F.sum("delta").alias("_tot")
-    )
-    w_off = (
-        Window.partitionBy("cname", "ckey")
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn("_off", F.sum("_tot").over(w_off)).select(
-        "cname", "ckey", "_chunk", "_off"
-    )
-    return (
-        chunked.join(F.broadcast(offsets), ["cname", "ckey", "_chunk"], "left")
-        .withColumn("_n", F.col("_ls") + F.coalesce(F.col("_off"), F.lit(0)))
-        .drop("_chunk", "_ls", "_off")
-    )
 
 
 def bit_values_sql(rules: list[Rule]) -> tuple[str, str]:

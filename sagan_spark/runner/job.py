@@ -35,10 +35,12 @@ import hashlib
 import json
 import os
 import time
+from importlib import resources
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import sagan_spark
 from sagan_spark.pages import BASE_EPOCH, SPAN_S
 from sagan_spark.pipeline import Pipeline
 from sagan_spark.rules.fixture_rules import RULESET, fixture_rules
@@ -71,19 +73,42 @@ def lookback_seconds(rules: list[Rule]) -> int | None:
     return lb
 
 
+def source_digest(root) -> str:
+    """sha256 over every ``*.py`` file under ``root`` (a ``Path`` or an
+    ``importlib.resources`` Traversable, which also walks a zip), in
+    sorted relative-path order: the code revision a run executes."""
+    h = hashlib.sha256()
+
+    def walk(d, rel: str) -> None:
+        for p in sorted(d.iterdir(), key=lambda p: p.name):
+            if p.is_dir():
+                walk(p, f"{rel}{p.name}/")
+            elif p.name.endswith(".py"):
+                h.update(f"{rel}{p.name}\0".encode())
+                h.update(p.read_bytes())
+
+    walk(root, "")
+    return h.hexdigest()
+
+
 def lineage_fingerprint(input_path: str, rep: int, ruleset_text: str | None = None) -> str:
     """Run identity = (input, rep, ruleset sha, code rev).  This is the
     batch re-expression of R2 ``dynamic_load`` ([U] rules.c reload on
     SIGHUP): editing the ruleset changes the fingerprint, so every
     unit's manifest mismatches and the next run recomputes everything
     under the new rules — reload-on-restart with exact provenance,
-    instead of reload-in-place."""
-    code_rev = os.popen("git -C /root/repo rev-parse --short HEAD 2>/dev/null").read().strip()
+    instead of reload-in-place.
+
+    The code rev hashes the imported ``sagan_spark`` package's own
+    sources, so it is right wherever the package was loaded from — a
+    checkout, an installed copy, or the ``--py-files`` zip under
+    ``spark-submit``."""
+    code_rev = source_digest(resources.files(sagan_spark))[:12]
     rs = RULESET if ruleset_text is None else ruleset_text
     h = hashlib.sha256(
         f"{input_path}|{rep}|{hashlib.sha256(rs.encode()).hexdigest()}".encode()
     ).hexdigest()[:16]
-    return f"{h}@{code_rev or 'unknown'}"
+    return f"{h}@{code_rev}"
 
 
 def run_partitioned(

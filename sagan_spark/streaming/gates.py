@@ -79,6 +79,10 @@ def _apply(
     )
 
 
+# The r5 composite-group state replaced the pre-r5 schema
+# "(eepoch, eop, eexpire, expiries)".  applyInPandasWithState state
+# schemas do not evolve, so a checkpoint written before r5 cannot be
+# resumed: restart the query from a fresh checkpoint directory.
 BIT_STATE_SCHEMA = "lat array<string>, exps array<string>"
 
 # sentinel expiry for `set` events with no expire: effectively never
@@ -205,9 +209,11 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
       * a rule whose tests span SEVERAL names gets a COMPOSITE group
         ("\\x00multi:<sid>", key): its tester rows AND a duplicate of
         every relevant writer's rows ride that group, whose state holds
-        per-name slots — ALL tests must share one track (differing
-        tracks would need a cross-group join the state store doesn't
-        have; rejected loudly).
+        per-name slots.
+
+    Either way ALL of a rule's tests must share one track: tests keyed
+    by differing tracks would need a cross-group join the state store
+    doesn't have, so they are rejected loudly (batch-only).
 
     A tester row carries ALL of its rule's test specs in ``cmps`` and
     is emitted iff EVERY spec passes — the streaming twin of the batch
@@ -278,30 +284,26 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
         names = {nm for nm, _, _ in entries}
         tracks = {tr for _, tr, _ in entries}
         specs = [sp for _, _, sp in entries]
+        if len(tracks) > 1:
+            # every state group keys on ONE track's value; tests keyed
+            # by different tracks would need a cross-group join the
+            # streaming store doesn't have ([U] flexbit.c) — one group
+            # per track would emit on a partial pass, and once per
+            # track when all pass
+            raise NotImplementedError(
+                f"streaming bit tests with DIFFERING tracks (sid {sid}, "
+                f"tracks {sorted(tracks)}) are batch-only"
+            )
+        (track,) = tracks
         if len(names) == 1:
-            nm = next(iter(names))
-            single_names.add(nm)
-            # count tests on one name may still carry several specs —
-            # they fold into one cmps string (ALL must pass); differing
-            # tracks are fine here (one tester row per track)
-            by_track: dict[str, list[str]] = {}
-            for _, tr, sp in entries:
-                by_track.setdefault(tr, []).append(sp)
-            for tr, sps in sorted(by_track.items()):
-                branches.append(tester_branch(nm, sid, tr, sps))
+            # one name: the plain (name, key) group; several specs on
+            # it fold into one cmps string (ALL must pass)
+            (group,) = names
+            single_names.add(group)
         else:
-            if len(tracks) > 1:
-                # composite state groups key on ONE track's value; tests
-                # keyed by different tracks would need a cross-group
-                # join the streaming store doesn't have ([U] flexbit.c)
-                raise NotImplementedError(
-                    f"streaming bit tests across multiple names with "
-                    f"DIFFERING tracks (sid {sid}, tracks {sorted(tracks)}) "
-                    "are batch-only"
-                )
             group = f"\x00multi:{sid}"
             composite_names[group] = names
-            branches.append(tester_branch(group, sid, next(iter(tracks)), specs))
+        branches.append(tester_branch(group, sid, track, specs))
 
     for sid, name, track, op, expire in writes:
         if name in single_names:

@@ -142,79 +142,9 @@ COUNT_RULE = Rule(
 COUNT_ROWS = _rows(10, [0, 10, 20]) + _rows(14, [5, 15, 105, 115, 130])
 
 
-def _count_kept(spark, monkeypatch, mode, threshold=None):
-    monkeypatch.setenv("SPARK_GRAFT_FLEXCOUNT_MODE", mode)
-    if threshold is not None:
-        monkeypatch.setenv("SPARK_GRAFT_FLEXCOUNT_CHUNK_ROWS", str(threshold))
+def test_flexbits_count_single_vs_chunked_agree(spark):
+    """flexbits ``count`` semantics: a tester passes iff the number of
+    unexpired sets on its (name, key) at its event time satisfies the
+    comparator, computed by the single running-sum window."""
     out = apply_bit_tests(_frame(spark, COUNT_ROWS), [SET_RULE, COUNT_RULE], spark)
-    return _kept_epochs(out, 14)
-
-
-def test_flexbits_count_single_vs_chunked_agree(spark, monkeypatch):
-    """The epoch-chunked two-phase prefix sum is semantics-identical to
-    the single-window running sum (the hot-key escalation path)."""
-    expected = [15, 105]  # count>1 at those tester times
-    assert _count_kept(spark, monkeypatch, "single") == expected
-    assert _count_kept(spark, monkeypatch, "chunked") == expected
-
-
-def test_flexbits_count_trigger_flips_on_hot_key(spark, monkeypatch):
-    """auto mode picks 'single' for small groups and escalates to
-    'chunked' once the hottest (name, key) group crosses the
-    configured row threshold."""
-    from sagan_spark.gates import xbits
-
-    expected = [15, 105]
-    assert _count_kept(spark, monkeypatch, "auto") == expected
-    assert xbits.LAST_FLEXCOUNT_PLAN == "single"
-    # synthetic hot key: drop the threshold below this group's size
-    assert _count_kept(spark, monkeypatch, "auto", threshold=3) == expected
-    assert xbits.LAST_FLEXCOUNT_PLAN == "chunked"
-    assert xbits._pick_flexcount_plan(10**9) == "chunked"
-
-
-def test_flexcount_threshold_is_the_calibrated_value():
-    """Pin the r5-calibrated crossover (scripts/calibrate_flexcount.py:
-    single-window degrades super-linearly past ~10^6 rows/group while
-    chunked stays flat; tie at 1M, chunked 2x at 2M).  The default must
-    flip exactly above 2M rows/group."""
-    from sagan_spark.gates import xbits
-
-    assert xbits.FLEXCOUNT_CHUNK_THRESHOLD == 2_000_000
-    assert xbits._pick_flexcount_plan(2_000_000) == "single"
-    assert xbits._pick_flexcount_plan(2_000_001) == "chunked"
-
-
-def test_flexcount_probe_memo(spark, monkeypatch):
-    """auto-mode hottest-group probe is memoized per (upstream plan,
-    count specs): a second build over the same input must not re-run
-    the stats job (bench reps / repeated queries re-paid ~1 s of fixed
-    latency per plan build)."""
-    from sagan_spark.gates import xbits
-
-    monkeypatch.setenv("SPARK_GRAFT_FLEXCOUNT_MODE", "auto")
-    xbits.clear_flexcount_probe_cache()
-    frame = _frame(spark, COUNT_ROWS)
-    out1 = _kept_epochs(
-        apply_bit_tests(frame, [SET_RULE, COUNT_RULE], spark), 14
-    )
-    assert len(xbits._FLEXCOUNT_PROBE_CACHE) == 1
-    cached = dict(xbits._FLEXCOUNT_PROBE_CACHE)
-    # poison the cached value: if the second build re-probed, the memo
-    # entry would be overwritten back to the true count; if it read the
-    # memo, the poisoned value forces the chunked plan — observable via
-    # LAST_FLEXCOUNT_PLAN while results stay identical (plan choice
-    # never changes semantics)
-    (key,) = cached
-    xbits._FLEXCOUNT_PROBE_CACHE[key] = 10**9
-    # NOTE: reuse the SAME DataFrame object — a fresh createDataFrame
-    # local relation gets new expression ids and a different semantic
-    # hash (memo miss, re-probe, correct but uncached).  The production
-    # shape (spark.read.parquet of the same path) hashes stably.
-    out2 = _kept_epochs(
-        apply_bit_tests(frame, [SET_RULE, COUNT_RULE], spark), 14
-    )
-    assert xbits.LAST_FLEXCOUNT_PLAN == "chunked"  # memo was read, not re-probed
-    assert out1 == out2 == [15, 105]
-    xbits.clear_flexcount_probe_cache()
-    assert not xbits._FLEXCOUNT_PROBE_CACHE
+    assert _kept_epochs(out, 14) == [15, 105]  # count>1 at those tester times

@@ -33,6 +33,35 @@ def test_ruleset_change_invalidates_lineage():
     assert lineage_fingerprint("/other", 4, ruleset_text="alert ... sid:1;") != a
 
 
+def test_code_change_invalidates_lineage(tmp_path):
+    """The code rev in the lineage is a hash of the sagan_spark sources
+    themselves: one changed source byte changes it, and the package
+    zipped for ``spark-submit --py-files`` hashes the same as its tree."""
+    import shutil
+    import zipfile
+
+    import sagan_spark
+    from sagan_spark.runner.job import lineage_fingerprint, source_digest
+
+    pkg = tmp_path / "sagan_spark"
+    shutil.copytree(
+        os.path.dirname(sagan_spark.__file__), pkg,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    before = source_digest(pkg)
+    assert lineage_fingerprint("/in", 4).endswith("@" + before[:12])
+
+    archive = tmp_path / "sagan_spark.zip"
+    shutil.make_archive(str(archive.with_suffix("")), "zip", tmp_path, "sagan_spark")
+    assert source_digest(zipfile.Path(archive, "sagan_spark/")) == before
+
+    src = pkg / "runner" / "job.py"
+    data = bytearray(src.read_bytes())
+    data[-1] ^= 1
+    src.write_bytes(bytes(data))
+    assert source_digest(pkg) != before
+
+
 def test_partitioned_equals_global_and_resumes(spark, tmp_path):
     pages = pages_table(spark, SF_DIR, rep=4)
     out = str(tmp_path / "sinks")

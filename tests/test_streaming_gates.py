@@ -201,24 +201,35 @@ def test_streaming_flexbits_count_multi_name_matches_batch(spark, tmp_path):
 def test_streaming_bit_tests_differing_tracks_rejected(spark, tmp_path):
     """ALL-tests-pass across tests keyed by DIFFERENT tracks needs a
     cross-group join the streaming state store doesn't have — rejected
-    loudly (batch handles it: per-test key columns + min(_ok))."""
+    loudly (batch handles it: per-test key columns + min(_ok)).  This
+    holds whether the tests read several names or ONE name: one state
+    group per track would emit on a partial pass, and once per track
+    when every test passes."""
     import pytest
 
     from sagan_spark.rules.model import Rule, XbitOp
 
-    r = Rule(
+    multi_name = Rule(
         sid=99,
         xbits=(
             XbitOp(op="count", name="a", track="by_domain", cmp="gt", value=1),
             XbitOp(op="count", name="b", track="by_src", cmp="gt", value=1),
         ),
     )
+    same_name = Rule(
+        sid=97,
+        xbits=(
+            XbitOp(op="isset", name="a", track="by_domain"),
+            XbitOp(op="isset", name="a", track="by_src"),
+        ),
+    )
     pages = pages_table(spark, SF_DIR, rep=1)
     src = str(tmp_path / "pages_src_multi")
     pages.coalesce(1).write.mode("overwrite").parquet(src)
     hits = streaming_hits(read_pages_stream(spark, src))
-    with pytest.raises(NotImplementedError, match="batch-only"):
-        xbits_gate_stream(hits, [r])
+    for r in (multi_name, same_name):
+        with pytest.raises(NotImplementedError, match="batch-only"):
+            xbits_gate_stream(hits, [r])
 
 
 def test_mixed_bit_families_rejected_everywhere(spark, tmp_path):
